@@ -224,6 +224,12 @@ object Bench {
     "q_mm_audio",
     "q_mm_decode")
 
+  /** File of the per-query record: a full headline run owns
+    * `bench_last.<sf>.json`, the file compared across rounds; a subset
+    * run writes `bench_last.<sf>.subset.json`. */
+  def lastRecordName(sfName: String, fullHeadline: Boolean): String =
+    if (fullHeadline) s"bench_last.$sfName.json" else s"bench_last.$sfName.subset.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // tolerant parse (round 16, same as Verify): a malformed
@@ -612,11 +618,14 @@ object Bench {
     // bench_best.<sf>.json in the driver's own contract-line shape, so
     // round-over-round per-query comparison never again depends on what a
     // 2KB stdout tail happened to keep (PERF_r16/r17 both had
-    // per_query:{} / n_common:0 for exactly that reason).
+    // per_query:{} / n_common:0 for exactly that reason). The record
+    // carries its regime (cpus, whether it is the full headline), and a
+    // subset run writes beside the full-suite file instead of over it.
+    val fullHeadline = selected == headline
     val lastPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_BENCH_BEST_DIR", "."), s"bench_last.$sfName.json")
+      sys.env.getOrElse("GRAFT_BENCH_BEST_DIR", "."), lastRecordName(sfName, fullHeadline))
     try java.nio.file.Files.writeString(lastPath,
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","n":${results.size},"queries":$qs,"failed":${strArr(failed)},"sha":"$sha","ts":"$ts","sf":"$sfName"}""" + "\n")
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","n":${results.size},"cpus":$cpus,"full_headline":$fullHeadline,"queries":$qs,"failed":${strArr(failed)},"sha":"$sha","ts":"$ts","sf":"$sfName"}""" + "\n")
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not write $lastPath: ${e.getMessage}")
     }

@@ -79,6 +79,16 @@ object Record {
   def fresh(rawText: String, whitespaced: Boolean = false): Record =
     Record(Identifier.id(rawText, whitespaced), rawText,
       Map.empty, Map.empty, Map.empty, Map.empty, whitespaced)
+
+  /** Top-level field names in the encoder's schema order. */
+  lazy val fieldNames: Seq[String] =
+    org.apache.spark.sql.Encoders.product[Record].schema.fieldNames.toIndexedSeq
+
+  /** Column form of [[Record.viewNames]] over a record frame: the distinct
+    * view names across the four kind maps, with no typed decode. */
+  def viewNamesColumn: Column = F.array_distinct(F.concat(
+    F.map_keys(F.col("labelViews")), F.map_keys(F.col("clusterViews")),
+    F.map_keys(F.col("parseViews")), F.map_keys(F.col("views"))))
 }
 
 /** Cross-document record (reference `curator.thrift:46-53`): a corpus-level

@@ -64,24 +64,22 @@ final class AnnotationEngine(val registry: Map[AnnotationMode, ViewOperator]) ex
 
   /** D10: "lowest common annotation level" — intersection of the view-name
     * sets of the sampled records (`getCommonAnnotations`,
-    * `JobHandler.java:494-546`). Distributed: explode + group + count
-    * (no driver-side fold). */
+    * `JobHandler.java:494-546`). At most `sampleK` small name arrays reach
+    * the driver, so one collect plus a driver-side intersection beats any
+    * distributed reduction (no cache, no shuffle, no typed decode). */
   def commonAnnotations(ds: Dataset[Record], sampleK: Int = 25): Set[String] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val sampled = sample(ds, sampleK).cache()
-    try {
-      val total = sampled.count()
-      if (total == 0) Set.empty
-      else sampled.flatMap(_.viewNames).toDF("view")
-        .groupBy("view").count()
-        .filter(col("count") === total)
-        .select("view").as[String].collect().toSet
-    } finally { sampled.unpersist(); () }
+    val names = sample(ds, sampleK).select(Record.viewNamesColumn).as[Seq[String]].collect()
+    if (names.isEmpty) Set.empty
+    else names.iterator.map(_.toSet).reduce(_ intersect _)
   }
 
   /** Corpus-level plan: which jobs would the reference launch for this corpus
-    * (D12) — sampling-based common-annotation detection feeding the planner. */
+    * (D12) — sampling-based common-annotation detection feeding the planner.
+    * An inspection operator: it reports view PRESENCE in a sample, so it
+    * can miss new or stale documents; `Pipeline.run` does not gate on it
+    * (per-record skipping in `Planner.provide` is exact). */
   def planForCorpus(
       ds: Dataset[Record],
       target: AnnotationMode,

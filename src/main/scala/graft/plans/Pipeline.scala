@@ -14,8 +14,12 @@ import graft.sources.{Sources, ThriftCompat}
   *      — `containsSerializedRecords`, D11;
   *   2. archive lookup: reuse stored annotated records by content hash
   *      (D15) when a store is given;
-  *   3. plan: target's dependency chain minus common annotations detected
-  *      by sampling (D12), or minus a user-forced start;
+  *   3. plan: work-skipping is per record — `Planner.provide` keeps every
+  *      present, fresh view and recomputes missing or version-stale ones;
+  *      a user-forced start asserts its dependencies present. The sampled
+  *      corpus plan (D12, `AnnotationEngine.planForCorpus`) is
+  *      observational only: a sample can miss the new or stale documents,
+  *      so it does not gate the run;
   *   4. execute: ONE narrow annotate pass (the reference's chain of
   *      MapReduce jobs, shuffle-free here);
   *   5. commit: upsert into the record store (D14), rotate any previous
@@ -62,11 +66,8 @@ final class Pipeline(engine: AnnotationEngine) {
       case Some(store) => Sources.lookup(fresh, Sources.readRecords(spark, store))
       case None => fresh
     }
-    val plan = engine.planForCorpus(input, target, forcedStart)
-    val annotated =
-      if (plan.isEmpty) input // everything already present and fresh
-      else engine.annotate(input, target,
-        assumeFresh = Planner.assertedPresent(target, forcedStart))
+    val annotated = engine.annotate(input, target,
+      assumeFresh = Planner.assertedPresent(target, forcedStart))
     Sources.rotateOldOutput(spark, outputDir)
     Sources.writeRecords(annotated, outputDir, idPrefixPartitions = true)
     val result = Sources.readRecords(spark, outputDir)

@@ -222,12 +222,12 @@ object Annotation {
     // chain — ingest a record DIRECTORY, plan the dependency chain,
     // annotate in one narrow pass, rotate old output, write, upsert the
     // archive. The three q_annotate_* singles above time the operator;
-    // this times the COMPOSITION, so a regression in the planner probe,
+    // this times the COMPOSITION, so a regression in the annotate pass,
     // the rotation protocol, or the store upsert shows up in the bench
     // even when each piece passes its own spec. Staging (documents ->
     // record dir) is cached per sfDir; store and output are reset each
     // run so every run measures the identical cold path: the archive-HIT
-    // path (plan empty, annotate skipped) is a different workload,
+    // path (every view fresh, each record skipped) is a different workload,
     // spec'd in PipelineSpec, and mixing the two would make min-of-N
     // report whichever the scheduler hit. Oracle: per distinct non-empty
     // doc, n_tokens is the tokenizer replica from q_annotate_tokens and

@@ -186,32 +186,43 @@ object Sources {
 
   /** D14: archive upsert — a record replaces its stored version iff it
     * carries MORE views (`CuratorClient.informDatabaseOfUpdatedRecords`,
-    * 581-651). Full outer join on identifier; the richer side wins.
+    * 581-651).
     *
-    * Updates may carry the same identifier more than once (a micro-batch
-    * that saw a document twice): they are reduced to the richest version
-    * per id FIRST — richer-wins is then associative over any batch
-    * split, which is what makes the streaming sinks' sequential folds
-    * equal a one-shot merge (StreamingSpec's split-invariance property).
-    * Equal-richness duplicates tie-break on the sorted view-name list —
-    * deterministic, and immaterial when they are the same annotation
-    * depth of the same content (the only way ties arise from the
-    * deterministic annotators). */
+    * Rules, per identifier:
+    *   - among updates the richest (most distinct view names) wins; equal
+    *     richness tie-breaks to the smaller comma-joined sorted view-name
+    *     list (immaterial when the tied records are the same annotation
+    *     depth of the same content, the only way ties arise from the
+    *     deterministic annotators);
+    *   - that update replaces the stored record only with STRICTLY more
+    *     views; on equal richness the stored record stays.
+    * Reducing duplicate updates first makes richer-wins associative over
+    * any batch split, which is what makes the streaming sinks' sequential
+    * folds equal a one-shot merge (StreamingSpec's split-invariance
+    * property).
+    *
+    * Shape: one aggregation, no typed decode. Both sides become
+    * (id, the whole row as one struct, key) with key =
+    * (-viewCount, isUpdate, sortedViewNames); the union is reduced by one
+    * `groupBy(id).agg(min_by(row, key))`, so the key order encodes the
+    * rules above (the stored side's `isUpdate = false` wins ties) and the
+    * plan has exactly one shuffle. The row struct is built in `Record`'s
+    * field order on both sides so the positional union cannot misalign
+    * columns. A store is keyed by identifier; should it hold duplicates,
+    * they collapse by the same key. */
   def upsert(store: Dataset[Record], updates: Dataset[Record]): Dataset[Record] = {
     val spark = store.sparkSession
     import spark.implicits._
-    val reduced = updates.groupByKey(_.identifier).reduceGroups { (a, b) =>
-      val (na, nb) = (a.viewNames.size, b.viewNames.size)
-      if (na != nb) { if (na > nb) a else b }
-      else if (a.viewNames.toSeq.sorted.mkString(",") <=
-        b.viewNames.toSeq.sorted.mkString(",")) a else b
-    }.map(_._2)
-    def keyed(ds: Dataset[Record], name: String) =
-      ds.map(r => (r.identifier, r.viewNames.size, r)).toDF("id", s"${name}_n", name)
-    keyed(store, "stored").join(keyed(reduced, "fresh"), Seq("id"), "full")
-      .select(when(col("fresh_n").isNotNull &&
-          (col("stored_n").isNull || col("fresh_n") > col("stored_n")), col("fresh"))
-        .otherwise(col("stored")).as("r"))
+    def tagged(ds: Dataset[Record], isUpdate: Boolean): DataFrame = {
+      val names = Record.viewNamesColumn
+      ds.toDF().select(
+        col("identifier").as("id"),
+        struct(Record.fieldNames.map(col): _*).as("r"),
+        struct(negate(size(names)).as("n"), lit(isUpdate).as("update"),
+          array_join(array_sort(names), ",").as("names")).as("k"))
+    }
+    tagged(store, isUpdate = false).union(tagged(updates, isUpdate = true))
+      .groupBy("id").agg(min_by(col("r"), col("k")).as("r"))
       .select("r.*").as[Record]
   }
 

@@ -171,4 +171,9 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!BenchGuard.confirmedRegression(1.73, 3.19, Nil,
       lastEvidence = true))
   }
+
+  test("a subset run never overwrites the full-suite per-query record") {
+    assert(Bench.lastRecordName("sf0.1", fullHeadline = true) == "bench_last.sf0.1.json")
+    assert(Bench.lastRecordName("sf0.1", fullHeadline = false) == "bench_last.sf0.1.subset.json")
+  }
 }

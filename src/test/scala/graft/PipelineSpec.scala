@@ -74,6 +74,50 @@ class PipelineSpec extends SparkSpec {
       "POS must tag the ONE foreign token, not a recomputed segmentation")
   }
 
+  test("a corpus sample that misses new and stale docs does not skip them") {
+    import graft.model.Record
+    import graft.operators.Annotators
+    import graft.plans.Planner
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val eng = AnnotationEngine.default
+    val base = Files.createTempDirectory("graft-pipe-sampled").toString
+    val store = s"$base/store"
+    val texts = (0 until 200).map(i => s"Stored document $i is about the quick fox.")
+    val staleText = texts(17)
+    val older = "graft-chunk-0.9"
+    // the store: every doc annotated to VERB_SRL, one with an older chunk
+    Sources.writeRecords(eng.annotate(spark.createDataset(texts.map(Record.fresh(_))), M.VERB_SRL)
+      .map { r =>
+        if (r.rawText != staleText) r
+        else r.copy(labelViews = r.labelViews.updatedWith("chunk")(_.map(_.copy(source = older))))
+      }, store)
+    // the next input keeps every stored doc and adds one new doc; pick
+    // where it sits so the 25-record presence sample misses it (the
+    // stale doc carries every view, so the sample sees nothing to do)
+    val in = s"$base/in"
+    val newText = "A brand new document arrives today."
+    val found = (0 until 10).iterator.map { k =>
+      val pos = (k * 37) % (texts.size + 1)
+      val input = texts.patch(pos, Seq(newText), 0)
+      Sources.writeRecords(spark.createDataset(input.map(Record.fresh(_))).coalesce(1), in)
+      val looked = Sources.lookup(pipeline.ingest(spark, in), Sources.readRecords(spark, store))
+      eng.planForCorpus(looked, M.VERB_SRL).isEmpty
+    }.exists(identity)
+    assert(found, "no input order left the new doc out of the sample; the case is not covered")
+    val out = pipeline.run(spark, in, M.VERB_SRL, s"$base/out", storeDir = Some(store))
+      .collect().map(r => r.rawText -> r).toMap
+    assert(out.size == texts.size + 1)
+    val chain = Planner.chain(M.VERB_SRL)
+    for (m <- chain)
+      assert(out(newText).viewSource(m.viewName).contains(Annotators.registry(m).source),
+        s"new doc lacks a fresh ${m.viewName} view")
+    assert(out(staleText).viewSource("chunk").contains(Annotators.registry(M.CHUNK).source),
+      "the stale chunk view must be recomputed")
+    assert(Sources.readRecords(spark, store).collect().exists(_.rawText == newText),
+      "the new doc's annotated record must reach the store")
+  }
+
   test("store upsert widens records on a deeper annotation run") {
     val base = Files.createTempDirectory("graft-pipe-upsert").toString
     val store = s"$base/store"

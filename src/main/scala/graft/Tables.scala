@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.plans.SessionArtifacts
+
 /** Shared helpers for the query catalogs. */
 object Tables {
   /** Load a driver test table. The physical layout of `events.ts` has varied
@@ -13,32 +15,24 @@ object Tables {
     * session TZ is UTC in all entry points, so the NTZ→LTZ cast is
     * value-identical to how DuckDB's reader surfaces the same column and
     * oracle comparisons stay exact. */
-  def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    // one ANALYZED frame per (session, dir, table) for the JVM (round 18):
-    // a suite re-resolves each table hundreds of times (178 bench queries
-    // × 2-3 runs × 1-3 tables), and every spark.read.parquet pays driver
-    // file-listing + footer/schema resolution for an identical immutable
-    // lazy plan. The memo hands back the same DataFrame object — pure
-    // plan reuse, no data or results are cached; staleness shares the
-    // regenerate-inputs-in-place seam (Similarity.memoClear → tClear),
-    // and Verify/Bench are one-JVM-per-run over static inputs.
-    val key = (s, dir, n)
-    val cached = tMemo.get(key)
-    if (cached != null) cached
-    else tMemo.computeIfAbsent(key, _ =>
-      if (n == "events") {
-        // harmless for non-nanos files; required to read a nanos-physical ts
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        normalizeEventsTs(s.read.parquet(s"$dir/events.parquet"))
-      } else s.read.parquet(s"$dir/$n.parquet"))
-  }
-
-  private val tMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Drop every memoized table frame (the memoClear staleness seam; also
-    * any harness that regenerates input files in place mid-JVM). */
-  private[graft] def tClear(): Unit = tMemo.clear()
+  def t(s: SparkSession, dir: String, n: String): DataFrame =
+    // one ANALYZED frame per (session, dir, table) (round 18): a suite
+    // re-resolves each table hundreds of times, and every
+    // spark.read.parquet pays driver file-listing + footer/schema
+    // resolution for an identical immutable lazy plan. The store hands
+    // back the same DataFrame object — plan reuse, no data is cached —
+    // while its files digest as when it was read; a rewritten table file
+    // re-reads instead of serving a stale listing.
+    SessionArtifacts.value[(DataFrame, Option[String])]("tables", (s, dir, n),
+        { case (df, d) => SessionArtifacts.leafDigest(df) == d }) {
+      val df =
+        if (n == "events") {
+          // harmless for non-nanos files; required to read a nanos-physical ts
+          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          normalizeEventsTs(s.read.parquet(s"$dir/events.parquet"))
+        } else s.read.parquet(s"$dir/$n.parquet")
+      (df, SessionArtifacts.leafDigest(df))
+    }._1
 
   /** Normalize whatever physical `ts` the events parquet carries to a
     * session-TZ TimestampType (also used by the streaming parity spec). */
@@ -50,27 +44,21 @@ object Tables {
 
   /** Session-cached staging directory for queries that materialize a
     * side copy of a test table (CSV/ORC/partitioned/bucketed/compacted
-    * stagings): `/tmp/<prefix>_<fp>` where the fingerprint hashes the
-    * source path AND a content checksum (row count + xxhash64-of-rows
-    * sum, one cheap aggregate per invocation). A path-only key let a
-    * regenerated fixture at the same path silently reuse stale staged
-    * data while the oracle recomputed from the new file — spurious
-    * divergence misdiagnosed as an engine bug (the q_jsonl_ingest
-    * staging always guarded against this; the later stagings now share
-    * the guard). */
+    * stagings, the pipeline's record corpus, the JSONL round trip):
+    * `/tmp/<prefix>_<fp>` where the fingerprint hashes the source path
+    * AND a content checksum (row count + bit_xor of row xxhash64s). A
+    * path-only key let a regenerated fixture at the same path silently
+    * reuse stale staged data while the oracle recomputed from the new
+    * file — spurious divergence misdiagnosed as an engine bug. */
   def stagingDir(s: SparkSession, dir: String, table: String, prefix: String): String = {
     val df = t(s, dir, table)
-    // The content checksum is one full-scan aggregate per invocation —
-    // and every staging query re-invokes it on every run (2-3 bench runs
-    // × 7 call sites = ~20 scans a suite). Memoize it per session behind
-    // the source files' (path, length, mtime) digest — the same trust
-    // granularity as the quantizer memo's leafDigest: unchanged files ⟹
+    // The content checksum is one full-scan aggregate, and every staging
+    // query re-invokes it on every run. The store keeps it behind the
+    // source files' (path, length, mtime) digest: unchanged files ⟹
     // unchanged checksum, while the regenerated-fixture scenario the
-    // checksum guards against necessarily changes length or mtime. A
-    // frame whose leaves aren't file-backed (never the case for t())
-    // falls through to the direct aggregate.
-    val fpKey = graft.operators.Similarity.leafDigest(df)
-      .map(d => s"$dir|$table|$d")
+    // checksum guards against changes length or mtime. A frame whose
+    // leaves aren't file-backed (never the case for t()) falls through to
+    // the direct aggregate.
     def checksum(): String = {
       val r = df.agg(
         count(lit(1)),
@@ -79,40 +67,14 @@ object Tables {
         coalesce(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))), lit(0L))).head()
       s"${r.getLong(0)}|${r.getLong(1)}"
     }
-    val content = fpKey match {
-      case Some(k) =>
-        val c = stagingFps.get(k)
-        if (c != null) c else stagingFpsPut(k, checksum())
+    val content = SessionArtifacts.leafDigest(df) match {
+      case Some(d) => SessionArtifacts.value("staging", s"$dir|$table|$d")(checksum())
       case None => checksum()
     }
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$dir|$table|$content".getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(12)
     new java.io.File(sys.props("java.io.tmpdir"), s"${prefix}_$md").getAbsolutePath
-  }
-
-  private val stagingFps =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop every memoized staging checksum. Called by
-    * [[graft.operators.Similarity.memoClear]] so the one
-    * regenerate-inputs-in-place seam resets EVERY session memo together
-    * (advisor round 17: a fixture rewritten in place with identical
-    * length inside mtime granularity would otherwise silently reuse a
-    * stale staging dir — exactly what the checksum was added to catch).
-    * Also the crude size bound: entries are a few dozen bytes and there
-    * are ~7 staging call sites, but a long-lived session cycling many
-    * data dirs should not accrete forever. */
-  private[graft] def stagingFpsClear(): Unit = stagingFps.clear()
-
-  /** Keep the staging-checksum memo bounded without LRU machinery: the
-    * key space is (dir, table, file-metadata digest) — regenerating
-    * fixtures mints new digests — so past a generous cap just reset;
-    * a re-checksum per staging site is one cheap aggregate. */
-  private def stagingFpsPut(k: String, v: String): String = {
-    if (stagingFps.size > 64) stagingFps.clear()
-    stagingFps.putIfAbsent(k, v)
-    v
   }
 
   private val stagingLocks =

@@ -18,9 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics including boundary empties), form word 3-gram shingles, hash
   * each, and keep k running minima of the affine family
   * h_i = (a_i·base + b_i) mod p (p = 2^31-1, products < 2^59) — the same
-  * portable family the DuckDB oracle replicates (see
-  * graft.queries.Ext.MinHashP; the coefficient formulas here must stay in
-  * sync with Ext.aCoef/bCoef).
+  * portable family the DuckDB oracle replicates from [[MinHashSig.aCoef]]
+  * and [[MinHashSig.bCoef]].
   *
   * `portable = true` derives the 28-bit base from an md5 prefix (what the
   * oracle recomputes); `portable = false` uses xxhash64 seed 42, matching
@@ -59,7 +58,16 @@ case class MinHashSig(child: Expression, k: Int, portable: Boolean)
 
 object MinHashSig {
 
+  /** The portable MinHash family, identical in Spark and DuckDB: base =
+    * 28-bit md5 prefix (`conv(substring(md5(s),1,7),16,10)` ≡ DuckDB
+    * `CAST('0x'||substr(md5(s),1,7) AS BIGINT)`), then k affine maps
+    * h_i = (a_i·base + b_i) mod p over the Mersenne prime p = 2^31-1.
+    * Products stay < 2^59, so 64-bit arithmetic never overflows in either
+    * engine, which is what makes the LSH pipeline oracle-checkable. The
+    * oracle SQL (graft.queries.Ext) reads these same definitions. */
   final val P = 2147483647L
+  def aCoef(i: Int): Long = (2654435761L * (2 * i + 1)) % P
+  def bCoef(i: Int): Long = (2246822519L * (i + 1)) % P
 
   /** Named `evalSig`, not `eval` (static-forwarder collision with
     * `Expression.eval(InternalRow)` breaks codegen otherwise). */
@@ -90,13 +98,12 @@ object MinHashSig {
     new GenericArrayData(mins)
   }
 
-  // one coefficient table per k, cached (keep in sync with Ext.aCoef/bCoef)
+  // one coefficient table per k, cached
   private val coefCache =
     new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
   private def coefs(k: Int): (Array[Long], Array[Long]) =
     coefCache.computeIfAbsent(k, kk =>
-      (Array.tabulate(kk)(i => (2654435761L * (2 * i + 1)) % P),
-        Array.tabulate(kk)(i => (2246822519L * (i + 1)) % P)))
+      (Array.tabulate(kk)(aCoef), Array.tabulate(kk)(bCoef)))
 
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

@@ -71,23 +71,7 @@ final class Pipeline(engine: AnnotationEngine) {
     Sources.rotateOldOutput(spark, outputDir)
     Sources.writeRecords(annotated, outputDir, idPrefixPartitions = true)
     val result = Sources.readRecords(spark, outputDir)
-    storeDir.foreach { store =>
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(store)
-      val fs = p.getFileSystem(hconf)
-      val tmp = new org.apache.hadoop.fs.Path(store + "_tmp")
-      val bak = new org.apache.hadoop.fs.Path(store + "_bak")
-      // a crash in a previous run's swap may have left the store absent
-      // with the full copy in _tmp/_bak — restore before the probe
-      Sources.recoverSwap(fs, p, tmp, bak)
-      val merged =
-        if (Sources.containsSerializedRecords(spark, store))
-          Sources.upsert(Sources.readRecords(spark, store), result)
-        else result
-      // write-then-swap: never read and overwrite the same path in one
-      // job, and keep a full store copy alive at every step
-      Sources.swapInPlace(fs, p, tmp, bak)(Sources.writeRecords(merged, _))
-    }
+    storeDir.foreach(Sources.commitToStore(result, _))
     result
   }
 }

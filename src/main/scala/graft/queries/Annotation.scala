@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.{t, ord}
+import graft.Tables.{t, ord, stagingDir, stageOnce}
 import graft.operators.{AnnotationMode => M}
 import graft.plans.AnnotationEngine
 import graft.sources.Sources
@@ -225,7 +225,7 @@ object Annotation {
     // this times the COMPOSITION, so a regression in the annotate pass,
     // the rotation protocol, or the store upsert shows up in the bench
     // even when each piece passes its own spec. Staging (documents ->
-    // record dir) is cached per sfDir; store and output are reset each
+    // record dir) is cached per table content (Tables.stagingDir); store and output are reset each
     // run so every run measures the identical cold path: the archive-HIT
     // path (every view fresh, each record skipped) is a different workload,
     // spec'd in PipelineSpec, and mixing the two would make min-of-N
@@ -236,23 +236,13 @@ object Annotation {
     "q_pipeline_e2e" -> ((s, dir) => {
       val spark = s
       import spark.implicits._
-      // cache key = dir + a cheap corpus fingerprint (count + id/length
-      // sums), not the path alone: regenerating the fixture data in
-      // place must restage, not silently run the pipeline over a stale
-      // staged corpus that no longer matches what q_annotate_* read
-      val fp = t(s, dir, "documents").agg(count(lit(1)),
-        coalesce(sum(col("doc_id")), lit(0L)),
-        coalesce(sum(length(col("text"))), lit(0L))).head()
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_e2e_" + md5Hex(
-          s"$dir|${fp.getLong(0)}|${fp.getLong(1)}|${fp.getLong(2)}").take(12))
-        .getAbsolutePath
+      val base = stagingDir(s, dir, "documents", "graft_e2e")
       val inDir = s"$base/input"
-      // _SUCCESS, not the bare dir: a crashed partial write must restage,
-      // not poison every later run of the cached corpus
-      if (!new java.io.File(inDir, "_SUCCESS").isFile)
+      // _SUCCESS, not the bare dir: a crashed partial write must restage
+      stageOnce(inDir)(new java.io.File(inDir, "_SUCCESS").isFile) {
         Sources.writeRecords(corpus(s, dir, "documents", "text"), inDir,
           idPrefixPartitions = true)
+      }
       val outDir = s"$base/out"
       val storeDir = s"$base/store"
       for (d <- Seq(outDir, storeDir)) // fresh chain every run

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.{t, ord, stageOnce}
+import graft.Tables.{t, ord, stagingDir, stageOnce}
+import graft.functions.MinHashSig
 
 /** [EXT] LLM-data-pipeline operators (SURVEY.md §2d): deduplication families,
   * similarity search over embeddings, text analysis, multimodal plumbing.
@@ -27,16 +28,6 @@ import graft.Tables.{t, ord, stageOnce}
   */
 object Ext {
   type Q = (SparkSession, String) => DataFrame
-
-  /** Portable MinHash family, identical in Spark and DuckDB: base = 28-bit
-    * md5 prefix (`conv(substring(md5(s),1,7),16,10)` ≡ DuckDB
-    * `CAST('0x'||substr(md5(s),1,7) AS BIGINT)`), then k affine maps
-    * h_i = (a_i·base + b_i) mod p over the Mersenne prime p = 2^31-1.
-    * Products stay < 2^59, so 64-bit arithmetic never overflows in either
-    * engine — which is what makes the LSH pipeline oracle-checkable. */
-  private[queries] val MinHashP = 2147483647L
-  private[queries] def aCoef(i: Int): Long = (2654435761L * (2 * i + 1)) % MinHashP
-  private[queries] def bCoef(i: Int): Long = (2246822519L * (i + 1)) % MinHashP
 
   /** Order-isomorphic fixed-width lang pack (q_prep_pipeline): the first
     * 14 UTF-8 BYTES of the tag, big-endian, as a DECIMAL(38,0) — numeric
@@ -166,14 +157,6 @@ object Ext {
   private def canonicalDocs(s: SparkSession, dir: String): DataFrame =
     graft.operators.TextDedup.canonicalize(t(s, dir, "documents"), "doc_id", "text")
 
-  /** The near-dup pair graph every curation CONSUMER shares (keep_best,
-    * keep_central, ledger, cluster_cohesion, source_overlap) — derived
-    * once per session per corpus through [[graft.plans.PairGraphCache]]
-    * (a disk-backed, never-collected artifact: the "write the pair graph
-    * once, audit it from every angle" shape a real curation session
-    * uses). The GENERATOR-measuring queries (q_dedup_ngram_jaccard, the
-    * cluster family, q_pagerank) keep deriving inline so their bench
-    * rows time the actual derivation. */
   /** Fixed 10-token-window segmentation of the documents table (this
     * corpus has no line structure) — shared by the batch segment dedup
     * (q_dedup_lines) and its streaming replay so both feed the oracle
@@ -187,9 +170,17 @@ object Ext {
         graft.functions.TokenWindows.token_windows(col("text"), 10))
       .filter(size(col("segs")) > 0)
 
+  /** The near-dup pair graph every curation CONSUMER shares (keep_best,
+    * keep_central, ledger, cluster_cohesion, source_overlap) — derived
+    * once per session per corpus as a `files` entry of
+    * [[graft.plans.SessionArtifacts]] (a disk-backed, never-collected
+    * artifact: the "write the pair graph once, audit it from every
+    * angle" shape a real curation session uses). The GENERATOR-measuring queries (q_dedup_ngram_jaccard, the
+    * cluster family, q_pagerank) keep deriving inline so their bench
+    * rows time the actual derivation. */
   private def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.files(canon,
       s"jac:0.2:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.jaccardPairs(canon, "doc_id", "text",
         threshold = 0.2, portable = !graft.Tables.benchMode,
@@ -206,7 +197,7 @@ object Ext {
     * re-derived the full threshold-0 pass (~0.7 s each at sf0.1). */
   private def truthPairs(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.files(canon,
       s"jac:0.0:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.jaccardPairs(canon, "doc_id", "text",
         threshold = 0.0, portable = !graft.Tables.benchMode,
@@ -219,7 +210,7 @@ object Ext {
     * q_lsh_scurve); q_dedup_minhash stays the inline generator row. */
   private def minhashCands(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.files(canon,
       s"mh:0.0:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.minhashPairs(canon, "doc_id", "text",
         threshold = 0.0, portable = !graft.Tables.benchMode,
@@ -237,7 +228,7 @@ object Ext {
     * inline so their bench rows time the algorithm. */
   private def nearDupComponents(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.files(canon,
       s"cc:jac0.2:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.duplicateClustersAuto(nearDupPairs(s, dir))
     }
@@ -278,7 +269,7 @@ object Ext {
     * `q_dedup_ledger` itself keeps deriving inline so its bench row
     * times the actual derivation. */
   private def curationLedgerCached(s: SparkSession, dir: String): DataFrame =
-    graft.plans.PairGraphCache.cached(t(s, dir, "documents"),
+    graft.plans.SessionArtifacts.files(t(s, dir, "documents"),
       s"ledger:${graft.Tables.benchMode}") { curationLedger(s, dir) }
 
   // ---- deduplication --------------------------------------------------
@@ -703,7 +694,7 @@ object Ext {
       // CONSUMER of the containment graph (q_dedup_containment is the
       // generator-measuring row and keeps deriving inline)
       val canon = canonicalDocs(s, dir)
-      val pairs = graft.plans.PairGraphCache.cached(canon,
+      val pairs = graft.plans.SessionArtifacts.files(canon,
         s"cont:0.3:${graft.Tables.benchMode}") {
         graft.operators.TextDedup.containmentPairs(
           canon, "doc_id", "text", threshold = 0.3,
@@ -857,7 +848,7 @@ object Ext {
         .withColumnRenamed("keep_score", "keep_chars"))
     }),
     // MinHash + LSH banding, fully oracle-checked (portable affine hash
-    // family, see MinHashP above); banding is an equi-join on
+    // family, see graft.functions.MinHashSig); banding is an equi-join on
     // (band, band-slice key), so the only shuffle is |docs|*bands rows,
     // independent of both shingle count and pair count.
     "q_dedup_minhash" -> ((s, dir) => {
@@ -936,7 +927,7 @@ object Ext {
       // the simhash candidate artifact (q_dedup_simhash stays the inline
       // generator row)
       val canon = canonicalDocs(s, dir)
-      val cand = graft.plans.PairGraphCache.cached(canon,
+      val cand = graft.plans.SessionArtifacts.files(canon,
         s"sh:3:${graft.Tables.benchMode}") {
         graft.operators.TextDedup.simhashPairs(
           canon, "doc_id", "text", maxHamming = 3,
@@ -1185,21 +1176,14 @@ object Ext {
     }),
 
     // JSONL round trip through the interchange source/sink: stage the
-    // documents table as sharded JSONL once (fingerprint-cached like
+    // documents table as sharded JSONL once (Tables.stagingDir, like
     // q_pipeline_e2e's record staging), read it back SCHEMA-FIRST, and
     // project per-doc facts the oracle recomputes from the original
     // table — any escaping/unicode/type loss in the round trip diverges
     // from the oracle. JSONL is the LLM training-data interchange
     // format; the engine-native store stays Parquet.
     "q_jsonl_ingest" -> ((s, dir) => {
-      val fp = t(s, dir, "documents").agg(count(lit(1)),
-        coalesce(sum(col("doc_id")), lit(0L)),
-        coalesce(sum(length(col("text"))), lit(0L))).head()
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|${fp.getLong(0)}|${fp.getLong(1)}|${fp.getLong(2)}"
-          .getBytes("UTF-8")).map(b => f"$b%02x").mkString
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_jsonl_" + md.take(12)).getAbsolutePath
+      val base = stagingDir(s, dir, "documents", "graft_jsonl")
       stageOnce(base)(new java.io.File(base, "_SUCCESS").isFile) {
         graft.sources.Sources.writeJsonl(
           t(s, dir, "documents").select("doc_id", "text", "lang"), base)
@@ -3771,7 +3755,7 @@ object Ext {
   }
 
   private val minhashMins: String = (0 until 32).map(i =>
-    s"min((${aCoef(i)} * base + ${bCoef(i)}) % $MinHashP) AS h$i").mkString(",\n  ")
+    s"min((${MinHashSig.aCoef(i)} * base + ${MinHashSig.bCoef(i)}) % ${MinHashSig.P}) AS h$i").mkString(",\n  ")
   private val minhashArr: String = (0 until 32).map(i => s"h$i").mkString("[", ", ", "]")
 
   /** q_dedup_clusters_star and _auto share q_dedup_clusters' oracle: all

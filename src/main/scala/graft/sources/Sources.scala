@@ -268,6 +268,27 @@ object Sources {
     }
   }
 
+  /** D14 store commit: merge `updates` into the record store at
+    * `storeDir` by the richer-record-wins [[upsert]] (seeding the store
+    * if it holds no records) and write-then-swap the result in through
+    * the store's `_tmp`/`_bak` companions. Recovery of a crashed earlier
+    * swap runs BEFORE the record probe: a crash window otherwise reads as
+    * an empty store, and the updates would silently re-seed it, losing
+    * the archive. Never reads and overwrites the same path in one job. */
+  def commitToStore(updates: Dataset[Record], storeDir: String): Unit = {
+    val spark = updates.sparkSession
+    val store = new org.apache.hadoop.fs.Path(storeDir)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(storeDir + "_tmp")
+    val bak = new org.apache.hadoop.fs.Path(storeDir + "_bak")
+    recoverSwap(fs, store, tmp, bak)
+    val merged =
+      if (containsSerializedRecords(spark, storeDir))
+        upsert(readRecords(spark, storeDir), updates)
+      else updates
+    swapInPlace(fs, store, tmp, bak)(writeRecords(merged, _))
+  }
+
   @inline private def mv(
       fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path,

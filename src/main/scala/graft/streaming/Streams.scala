@@ -721,17 +721,12 @@ object Streams {
   }
 
   /** Streaming archive upsert (reference D14 as a stream): each micro-batch
-    * merges into the record store via the same richer-record-wins upsert
-    * the batch pipeline uses, with a write-then-swap that keeps a full
-    * copy alive at EVERY point: the merged batch lands in `_tmp`, the live
-    * store is renamed aside to `_bak`, `_tmp` becomes the store, then
-    * `_bak` is dropped. A crash between any two steps leaves either the
-    * store or a complete copy in `_tmp`/`_bak`, which the next batch
-    * restores before reading (a bare delete-then-rename had a window
-    * where the only full copy was the rename source — a crash there lost
-    * the archive). foreachBatch + checkpointing gives exactly-once store
-    * contents (a replayed batch re-merges idempotently — upsert is
-    * idempotent by construction). */
+    * is committed to the record store by the batch pipeline's own
+    * [[graft.sources.Sources.commitToStore]] — richer-record-wins upsert,
+    * then a write-then-swap that keeps a full copy alive at EVERY point,
+    * restored by the next batch if a crash interrupts it. foreachBatch +
+    * checkpointing gives exactly-once store contents (a replayed batch
+    * re-merges idempotently — upsert is idempotent by construction). */
   def recordUpsertSink(
       records: org.apache.spark.sql.Dataset[graft.model.Record],
       storeDir: String,
@@ -739,23 +734,7 @@ object Streams {
     records.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.Record], _: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val store = new org.apache.hadoop.fs.Path(storeDir)
-        val tmp = new org.apache.hadoop.fs.Path(storeDir + "_tmp")
-        val bak = new org.apache.hadoop.fs.Path(storeDir + "_bak")
-        val fs = store.getFileSystem(hconf)
-        // restore BEFORE the emptiness probe, or the batch would silently
-        // re-seed an empty store and the archive would be lost
-        recoverSwap(fs, store, tmp, bak)
-        val merged =
-          if (graft.sources.Sources.containsSerializedRecords(spark, storeDir))
-            graft.sources.Sources.upsert(
-              graft.sources.Sources.readRecords(spark, storeDir), batch)
-          else batch
-        swapInPlace(fs, store, tmp, bak)(
-          graft.sources.Sources.writeRecords(merged, _))
-        ()
+        graft.sources.Sources.commitToStore(batch, storeDir)
       }
 
   /** Incremental streaming archive upsert — the form that keeps up once
@@ -788,34 +767,18 @@ object Streams {
           val cell = new org.apache.hadoop.fs.Path(store, s"id_prefix=$p")
           val tmp = new org.apache.hadoop.fs.Path(store, s"_cell_${p}_tmp")
           val bak = new org.apache.hadoop.fs.Path(store, s"_cell_${p}_bak")
-          recoverSwap(fs, cell, tmp, bak)
+          graft.sources.Sources.recoverSwap(fs, cell, tmp, bak)
           val cellBatch = batch.filter(prefix === p)
           val merged =
             if (fs.exists(cell))
               graft.sources.Sources.upsert(
                 spark.read.parquet(cell.toString).as[graft.model.Record], cellBatch)
             else cellBatch
-          swapInPlace(fs, cell, tmp, bak)(
+          graft.sources.Sources.swapInPlace(fs, cell, tmp, bak)(
             graft.sources.Sources.writeRecords(merged, _))
         }
         ()
       }
-
-  // swap/recovery primitives live in Sources (shared with the batch
-  // pipeline's store commit)
-  private def recoverSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
-      tmp: org.apache.hadoop.fs.Path,
-      bak: org.apache.hadoop.fs.Path): Unit =
-    graft.sources.Sources.recoverSwap(fs, target, tmp, bak)
-
-  private def swapInPlace(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
-      tmp: org.apache.hadoop.fs.Path,
-      bak: org.apache.hadoop.fs.Path)(write: String => Unit): Unit =
-    graft.sources.Sources.swapInPlace(fs, target, tmp, bak)(write)
 
   /** Convenience: file-stream source over a directory of event parquet. */
   def readEventStream(spark: org.apache.spark.sql.SparkSession, dir: String,

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.PairGraphCache
+import graft.plans.SessionArtifacts
 
-/** Contracts of the session-scoped disk-backed pair-graph cache: derive
-  * exactly once per (input, knobs), survive a Checkpoints.releaseAll
-  * sweep (the quality that rules out localCheckpoint for this artifact),
-  * key on knobs, pass in-memory corpora through uncached, and bound its
-  * disk footprint with LRU eviction. */
+/** Contracts of the session artifact store's disk-backed `files` kind
+  * (the pair-graph cache): derive exactly once per (input, knobs),
+  * survive a Checkpoints.releaseAll sweep (the quality that rules out
+  * localCheckpoint for this artifact), key on knobs, pass in-memory
+  * corpora through uncached, and bound the store with LRU eviction. */
 class PairGraphCacheSpec extends SparkSpec {
 
   private def mkCorpus(shift: Int = 0): org.apache.spark.sql.DataFrame = {
@@ -20,25 +20,25 @@ class PairGraphCacheSpec extends SparkSpec {
   }
 
   test("derives once, hits afterwards, and results are identical") {
-    PairGraphCache.clear()
+    SessionArtifacts.clear()
     val docs = mkCorpus()
     var derivations = 0
     def derive() = { derivations += 1
       docs.select(col("doc_id").as("doc_a"), (col("doc_id") + 1).as("doc_b")) }
-    val m0 = PairGraphCache.misses.get
-    val h0 = PairGraphCache.hits.get
-    val r1 = PairGraphCache.cached(docs, "t1")(derive()).collect().toSet
-    val r2 = PairGraphCache.cached(docs, "t1")(derive()).collect().toSet
+    val m0 = SessionArtifacts.stats("files").misses
+    val h0 = SessionArtifacts.stats("files").hits
+    val r1 = SessionArtifacts.files(docs, "t1")(derive()).collect().toSet
+    val r2 = SessionArtifacts.files(docs, "t1")(derive()).collect().toSet
     assert(derivations == 1, s"expected one derivation, got $derivations")
-    assert(PairGraphCache.misses.get == m0 + 1)
-    assert(PairGraphCache.hits.get == h0 + 1)
+    assert(SessionArtifacts.stats("files").misses == m0 + 1)
+    assert(SessionArtifacts.stats("files").hits == h0 + 1)
     assert(r1 == r2 && r1.nonEmpty)
   }
 
   test("cached frame survives a Checkpoints.releaseAll sweep") {
-    PairGraphCache.clear()
+    SessionArtifacts.clear()
     val docs = mkCorpus()
-    val f = PairGraphCache.cached(docs, "sweep") {
+    val f = SessionArtifacts.files(docs, "sweep") {
       docs.select(col("doc_id").as("doc_a"), lit(1L).as("doc_b"))
     }
     // the long-lived-session sweep between queries: a localCheckpoint-
@@ -49,41 +49,43 @@ class PairGraphCacheSpec extends SparkSpec {
   }
 
   test("distinct knob tags do not alias; in-memory corpora pass through") {
-    PairGraphCache.clear()
+    SessionArtifacts.clear()
     val docs = mkCorpus()
-    val a = PairGraphCache.cached(docs, "thr=0.2") {
+    val a = SessionArtifacts.files(docs, "thr=0.2") {
       docs.select(col("doc_id").as("doc_a")) }
-    val b = PairGraphCache.cached(docs, "thr=0.8") {
+    val b = SessionArtifacts.files(docs, "thr=0.8") {
       docs.filter(col("doc_id") < 2).select(col("doc_id").as("doc_a")) }
     assert(a.count() == 6 && b.count() == 2,
       "two knob tags over one corpus must cache separately")
     // in-memory input: no stable leaf to key on -> derive directly
     val mem = spark.range(3).selectExpr("id AS doc_id")
-    val m0 = PairGraphCache.misses.get
-    val c = PairGraphCache.cached(mem, "mem")(mem.select(col("doc_id").as("doc_a")))
+    val m0 = SessionArtifacts.stats("files").misses
+    val c = SessionArtifacts.files(mem, "mem")(mem.select(col("doc_id").as("doc_a")))
     assert(c.count() == 3)
-    assert(PairGraphCache.misses.get == m0, "in-memory corpus must not enter the cache")
+    assert(SessionArtifacts.stats("files").misses == m0,
+      "in-memory corpus must not enter the cache")
   }
 
   test("LRU cap bounds the disk footprint; evicted entries re-derive") {
-    PairGraphCache.clear()
-    val oldCap = PairGraphCache.maxEntries
-    PairGraphCache.maxEntries = 2
+    SessionArtifacts.clear()
+    val oldCap = SessionArtifacts.maxEntries
+    SessionArtifacts.maxEntries = 2
     try {
       val docs = mkCorpus()
       (1 to 4).foreach { i =>
-        PairGraphCache.cached(docs, s"cap:$i") {
+        SessionArtifacts.files(docs, s"cap:$i") {
           docs.select(col("doc_id").as("doc_a")) }.count()
       }
-      assert(PairGraphCache.size <= 2, s"cap 2 exceeded: ${PairGraphCache.size}")
-      val m0 = PairGraphCache.misses.get
-      PairGraphCache.cached(docs, "cap:1") {
+      val size = SessionArtifacts.stats("files").size
+      assert(size <= 2, s"cap 2 exceeded: $size")
+      val m0 = SessionArtifacts.stats("files").misses
+      SessionArtifacts.files(docs, "cap:1") {
         docs.select(col("doc_id").as("doc_a")) }.count()
-      assert(PairGraphCache.misses.get == m0 + 1,
+      assert(SessionArtifacts.stats("files").misses == m0 + 1,
         "evicted entry must re-derive (miss), not silently hit")
     } finally {
-      PairGraphCache.maxEntries = oldCap
-      PairGraphCache.clear()
+      SessionArtifacts.maxEntries = oldCap
+      SessionArtifacts.clear()
     }
   }
 
@@ -92,23 +94,23 @@ class PairGraphCacheSpec extends SparkSpec {
     // until the shutdown hook deletes the session root — a consumer
     // holding a lazily-planned frame across maxEntries+ insertions must
     // not hit FileNotFoundException at action time (advisor round 14)
-    PairGraphCache.clear()
-    val oldCap = PairGraphCache.maxEntries
-    PairGraphCache.maxEntries = 1
+    SessionArtifacts.clear()
+    val oldCap = SessionArtifacts.maxEntries
+    SessionArtifacts.maxEntries = 1
     try {
       val docs = mkCorpus()
-      val early = PairGraphCache.cached(docs, "early") {
+      val early = SessionArtifacts.files(docs, "early") {
         docs.select(col("doc_id").as("doc_a")) }
       (1 to 2).foreach { i =>
-        PairGraphCache.cached(docs, s"later:$i") {
+        SessionArtifacts.files(docs, s"later:$i") {
           docs.select(col("doc_id").as("doc_a")) }.count()
       }
-      assert(PairGraphCache.size <= 1, "cap must still hold")
+      assert(SessionArtifacts.stats("files").size <= 1, "cap must still hold")
       assert(early.count() == 6,
         "an evicted entry's frame must stay readable until session end")
     } finally {
-      PairGraphCache.maxEntries = oldCap
-      PairGraphCache.clear()
+      SessionArtifacts.maxEntries = oldCap
+      SessionArtifacts.clear()
     }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.plans.SessionArtifacts
 
 /** Library-level contracts of the similarity API beyond the oracle-checked
   * queries: k-means training determinism and the Lloyd improvement
@@ -426,10 +427,10 @@ class SimilaritySpec extends SparkSpec {
     val norm = math.sqrt(pc1.map(x => x * x).sum)
     assert(math.abs(norm - 1.0) < 1e-4,
       f"trained component must be unit-norm (got $norm%.6f)")
-    val hits0 = Similarity.memoHits.get
+    val hits0 = SessionArtifacts.stats("rows").hits
     val pc2 = Similarity.pcaComponent(vecs, dim, iters = 3)
       .head().getSeq[Double](0)
-    assert(pc2 == pc1 && Similarity.memoHits.get > hits0,
+    assert(pc2 == pc1 && SessionArtifacts.stats("rows").hits > hits0,
       "second identical training must replay the memoized component")
     // projections of MEAN-CENTERED data onto any fixed vector sum to ~0
     // (up to the 6-decimal rounding of means and projections)
@@ -444,20 +445,21 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
     val c1 = rows(Similarity.trainIvf(vecs, k = 4, iters = 2))
-    val hits0 = Similarity.memoHits.get
+    val hits0 = SessionArtifacts.stats("rows").hits
     val c2 = rows(Similarity.trainIvf(vecs, k = 4, iters = 2))
     assert(c2 == c1, "memo replay must be bit-identical")
-    assert(Similarity.memoHits.get > hits0,
+    assert(SessionArtifacts.stats("rows").hits > hits0,
       "second identical training must hit the memo, not re-train")
     // ground truth: an IN-MEMORY copy of the same vectors has no input
     // files, so it trains UNCACHED — the memoized result must match it
     val localRows = java.util.Arrays.asList(vecs.collect(): _*)
     val local = spark.createDataFrame(localRows, vecs.schema)
     assert(local.inputFiles.isEmpty, "local twin must be memo-exempt")
-    val misses0 = Similarity.memoMisses.get
-    val hits1 = Similarity.memoHits.get
+    val misses0 = SessionArtifacts.stats("rows").misses
+    val hits1 = SessionArtifacts.stats("rows").hits
     val c3 = rows(Similarity.trainIvf(local, k = 4, iters = 2))
-    assert(Similarity.memoMisses.get == misses0 && Similarity.memoHits.get == hits1,
+    val after = SessionArtifacts.stats("rows")
+    assert(after.misses == misses0 && after.hits == hits1,
       "in-memory frames must bypass the memo entirely")
     assert(c3 == c1, "uncached training must equal the memoized result")
   }
@@ -472,10 +474,10 @@ class SimilaritySpec extends SparkSpec {
     // residuals = file scan ⋈ LocalRelation — fingerprintable
     val cents = Similarity.trainIvf(vecs, k = 4, iters = 1)
     val cb1 = codebook(Similarity.residuals(vecs, cents))
-    val hits0 = Similarity.memoHits.get
+    val hits0 = SessionArtifacts.stats("rows").hits
     val cb2 = codebook(Similarity.residuals(vecs, cents))
     assert(cb2 == cb1, "memoized residual codebook must replay identically")
-    assert(Similarity.memoHits.get > hits0,
+    assert(SessionArtifacts.stats("rows").hits > hits0,
       "repeat residual training must hit the memo")
     // same schema, same corpus files, DIFFERENT literal centroid DATA
     // (identical canonicalized plans — only the leaf content digest can
@@ -484,18 +486,18 @@ class SimilaritySpec extends SparkSpec {
       r.getLong(0), r.getSeq[Double](1).map(_ + 7.5)))
     val shifted = spark.createDataFrame(
       java.util.Arrays.asList(shiftedRows: _*), cents.schema)
-    val misses0 = Similarity.memoMisses.get
+    val misses0 = SessionArtifacts.stats("rows").misses
     val cbShift = codebook(Similarity.residuals(vecs, shifted))
-    assert(Similarity.memoMisses.get > misses0,
+    assert(SessionArtifacts.stats("rows").misses > misses0,
       "shifted centroids must miss (distinct key), not bypass or alias")
     assert(cbShift != cb1,
       "distinct literal centroid frames must not alias one memo key")
   }
 
   test("quantizer memo: LRU cap evicts the eldest entry, hits refresh") {
-    val oldCap = Similarity.memoMaxEntries
-    Similarity.memoClear()
-    Similarity.memoMaxEntries = 4
+    val oldCap = SessionArtifacts.maxEntries
+    SessionArtifacts.clear()
+    SessionArtifacts.maxEntries = 4
     try {
       // tiny file-backed frame: iters=0 training is one trivial job, so
       // six distinct keys (distinct k => distinct knob tag) stay cheap
@@ -505,21 +507,21 @@ class SimilaritySpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite").parquet(dir)
       val tiny = spark.read.parquet(dir)
       (1 to 6).foreach(k => Similarity.trainIvf(tiny, k = k, iters = 0).collect())
-      assert(Similarity.memoSize <= 4,
-        s"cap 4 exceeded: memoSize = ${Similarity.memoSize}")
+      val size = SessionArtifacts.stats("rows").size
+      assert(size <= 4, s"cap 4 exceeded: rows size = $size")
       // k=1 and k=2 were evicted (eldest-first): re-training k=1 must MISS
-      val misses0 = Similarity.memoMisses.get
+      val misses0 = SessionArtifacts.stats("rows").misses
       Similarity.trainIvf(tiny, k = 1, iters = 0).collect()
-      assert(Similarity.memoMisses.get > misses0,
+      assert(SessionArtifacts.stats("rows").misses > misses0,
         "evicted entry must re-train (miss), not silently hit")
       // the most recent entry (k=6) survived: HIT
-      val hits0 = Similarity.memoHits.get
+      val hits0 = SessionArtifacts.stats("rows").hits
       Similarity.trainIvf(tiny, k = 6, iters = 0).collect()
-      assert(Similarity.memoHits.get > hits0,
+      assert(SessionArtifacts.stats("rows").hits > hits0,
         "recent entry must still be cached after evictions")
     } finally {
-      Similarity.memoMaxEntries = oldCap
-      Similarity.memoClear()
+      SessionArtifacts.maxEntries = oldCap
+      SessionArtifacts.clear()
     }
   }
 
@@ -552,9 +554,9 @@ class SimilaritySpec extends SparkSpec {
       Seq(s"file:$dir/data.parquet"))
     val c1 = rows(Similarity.trainIvf(first, k = 2, iters = 1))
     writeShift(100.0) // same path, new bytes — data regenerated in place
-    val misses0 = Similarity.memoMisses.get
+    val misses0 = SessionArtifacts.stats("rows").misses
     val c2 = rows(Similarity.trainIvf(spark.read.parquet(dir), k = 2, iters = 1))
-    assert(Similarity.memoMisses.get > misses0,
+    assert(SessionArtifacts.stats("rows").misses > misses0,
       "rewritten input at the same path must be a memo MISS")
     assert(c2 != c1, "replaying stale centroids after an in-place rewrite")
   }
